@@ -1,506 +1,27 @@
 package graft
 
-import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions._
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted}
 
-/** Scratch profiler: times sub-stages of the heavy queries. Not part of the
-  * driver contract. */
+/** On-demand time attribution for named `SparkEntry.queries`. Tables come
+  * from the scale-factor directory in `$SPARK_GRAFT_SF_DIR`.
+  *
+  *   runMain graft.Profile plans <suffix> <name>[,<name>...]
+  *   runMain graft.Profile jobs <name>[,<name>...] */
 object Profile {
-  def t(name: String)(df: => DataFrame): Unit = {
-    val t0 = System.nanoTime()
-    val n = df.count()
-    println(f"${(System.nanoTime() - t0) / 1e9}%8.2fs  $name ($n rows)")
-  }
-
   def main(args: Array[String]): Unit = {
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    if (args.headOption.contains("g2")) { profileG2(dir); return }
-    if (args.headOption.contains("g2b")) { profileG2Current(dir); return }
-    if (args.headOption.contains("g2floor")) { profileG2Floor(dir); return }
-    if (args.headOption.contains("dispatch")) { profileDispatchStats(dir); return }
-    if (args.headOption.contains("s7vol")) { profileS7Volume(dir); return }
-    if (args.headOption.contains("d10")) { profileD10(dir); return }
-    if (args.headOption.contains("g1b")) { profileG1b(dir); return }
-    if (args.headOption.contains("d4vol")) { profileD4Volumes(dir); return }
-    if (args.headOption.contains("d4r")) { profileD4R(dir); return }
-    if (args.headOption.contains("d4ab")) { profileD4AB(dir); return }
-    if (args.headOption.contains("d4part")) { profileD4Part(dir); return }
-    if (args.headOption.contains("ppjoin")) { profilePpjoin(dir); return }
-    if (args.headOption.contains("pqrecall")) { profilePqRecall(dir); return }
-    if (args.headOption.contains("s9bdiag")) { profileS9bDiag(dir); return }
-    if (args.headOption.contains("mawidth")) { profileMaWidth(dir); return }
-    if (args.headOption.contains("j02plan")) { profileJ02Plan(dir); return }
-    if (args.headOption.contains("jobs")) { profileJobs(dir, args.drop(1)); return }
-    if (args.headOption.contains("s8stage")) { profileS8(dir); return }
-    if (args.headOption.contains("s8var")) { profileS8Var(dir); return }
-    if (args.headOption.contains("plans")) { profilePlans(dir, args.drop(1)); return }
-    if (args.headOption.contains("loadcost")) { profileLoadCost(dir); return }
-    val spark = GraftSession(s"local[8]", "8")
-    import graft.text.TextAnalysis.{shingles, tokens}
-
-    val docs = Tables.documents(spark, dir)
-    docs.count()  // warm
-
-    args.headOption.foreach {
-      case "shj" => spark.conf.set("spark.sql.join.preferSortMergeJoin", "false")
+    args.headOption match {
+      case Some("plans") => profilePlans(dir, args.drop(1))
+      case Some("jobs") => profileJobs(dir, args.drop(1))
       case _ =>
+        System.err.println("usage: graft.Profile plans <suffix> <name>[,<name>...]" +
+          " | jobs <name>[,<name>...]")
+        sys.exit(2)
     }
-
-    val sh = docs.select(col("doc_id"), explode(shingles(tokens(col("text")))).as("s"))
-    t("shingleRows")(sh)
-    t("shingle freq")(sh.groupBy("s").count())
-    val sizes = sh.groupBy("doc_id").agg(count(lit(1)).as("n"))
-    t("naive inverted join + count")(
-      sh.toDF("a_id", "s").join(sh.toDF("b_id", "s2"),
-          col("s") === col("s2") && col("a_id") < col("b_id"))
-        .groupBy("a_id", "b_id").agg(count(lit(1)).as("common")))
-    t("d2 plain (inverted+verify)")(graft.dedup.Dedup.ngramJaccardPairs(docs, 0.5))
-    t("d2 prefix-filtered")(graft.dedup.Dedup.ngramJaccardPairsPrefix(docs, 0.5))
-    t("d3 bands")(graft.dedup.Dedup.minHashBands(
-      graft.text.TextAnalysis.shingleRows(docs)))
-    t("d3 full")(graft.dedup.Dedup.minHashLshPairs(docs, 0.5))
-    val simCodes = graft.dedup.Dedup.simHash(docs)
-    t("d4 codes")(simCodes)
-    t("d4 banded candidates (vs n(n-1)/2 all-pairs)")(
-      graft.dedup.Dedup.simHashCandidates(simCodes, 10))
-    t("d4 full")(graft.dedup.Dedup.simHashPairs(docs, 10))
-    t("s2 codes")(graft.similarity.Knn.srpCodes(Tables.embeddings(spark, dir)))
-    t("s2 full")(graft.similarity.Knn.lshTopK(Tables.embeddings(spark, dir), 5))
-    t("d5 neardup")(graft.similarity.Knn.cosineNearDupPairs(Tables.embeddings(spark, dir), 0.3))
-    t("a07 coa")(graft.operators.Aggregates.coaClassify(spark, dir))
-    t("j02 twophase")(graft.operators.Joins.j02TwoPhaseEnrich(spark, dir))
-    spark.stop()
   }
 
-  /** Partitioning experiments on the combo join at sf10 scale. */
-  def profileD4Part(dir: String): Unit = {
-    val spark = GraftSession()
-    import org.apache.spark.sql.functions._
-    val docs = Tables.documents(spark, dir)
-    docs.count()
-    val codes = graft.dedup.Dedup.simHash(docs).persist()
-    codes.count()
-    for (parts <- Seq(128, 512)) {
-      t(s"d4 survivors r=2 SHJ parts=$parts")(
-        graft.dedup.Dedup.simHashSurvivorsParts(codes, 10, 2, parts))
-    }
-    t("d4 survivors r=1 SHJ parts=512")(
-      graft.dedup.Dedup.simHashSurvivorsParts(codes, 10, 1, 512))
-    spark.stop()
-  }
-
-  /** A/B: the combo join at r=1 with masked-code keys vs old-style
-    * shifted-down block values — isolates join-key hash/partition luck. */
-  def profileD4AB(dir: String): Unit = {
-    val spark = GraftSession()
-    val docs = Tables.documents(spark, dir)
-    docs.count()
-    val codes = graft.dedup.Dedup.simHash(docs).persist()
-    codes.count()
-    import org.apache.spark.sql.functions._
-    val bits = graft.dedup.Dedup.simHashBits
-    val m = 11
-    val bounds = (0 until m).scanLeft(0) { (acc, b) =>
-      acc + bits / m + (if (b < bits % m) 1 else 0) }
-    def mk(shifted: Boolean) = {
-      val structs = (0 until m).map { b =>
-        val start = bounds(b); val width = bounds(b + 1) - start
-        val e = if (shifted) s"(simhash >> $start) & ${(1L << width) - 1}L"
-                else s"simhash & ${(((1L << width) - 1) << start)}L"
-        struct(lit(b).as("cmb"), expr(e).as("bv"))
-      }
-      codes.select(col("doc_id"), col("simhash"), explode(array(structs: _*)).as("s"))
-        .select(col("doc_id"), col("simhash"), col("s.cmb").as("cmb"), col("s.bv").as("bv"))
-    }
-    for (shifted <- Seq(true, false, true, false)) {
-      val rows = mk(shifted)
-      t(s"d4 r=1 join shifted=$shifted")(
-        rows.toDF("a_id", "ha", "cmb", "bv")
-          .join(rows.toDF("b_id", "hb", "cmb", "bv"), Seq("cmb", "bv"))
-          .filter(col("a_id") < col("b_id"))
-          .filter(bit_count(expr("ha ^ hb")) <= 10))
-    }
-    // old round-9 shape: CACHED exploded table, join reads the cache twice
-    val blocksOld = mk(true).persist()
-    blocksOld.count()
-    for (i <- 1 to 2)
-      t(s"d4 r=1 join CACHED-blocks (old shape) #$i")(
-        blocksOld.toDF("a_id", "ha", "cmb", "bv")
-          .join(blocksOld.toDF("b_id", "hb", "cmb", "bv"), Seq("cmb", "bv"))
-          .filter(col("a_id") < col("b_id"))
-          .filter(bit_count(expr("ha ^ hb")) <= 10))
-    val q = blocksOld.toDF("a_id", "ha", "cmb", "bv")
-      .join(blocksOld.toDF("b_id", "hb", "cmb", "bv"), Seq("cmb", "bv"))
-      .filter(col("a_id") < col("b_id"))
-      .filter(bit_count(expr("ha ^ hb")) <= 10)
-    println("=== OLD SHAPE PLAN ==="); q.explain("formatted")
-    val q2 = mk(false).toDF("a_id", "ha", "cmb", "bv")
-      .join(mk(false).toDF("b_id", "hb", "cmb", "bv"), Seq("cmb", "bv"))
-      .filter(col("a_id") < col("b_id"))
-      .filter(bit_count(expr("ha ^ hb")) <= 10)
-    println("=== NEW SHAPE PLAN ==="); q2.explain("formatted")
-    spark.stop()
-  }
-
-  /** End-to-end d4 timing per explicit r, at bench parallelism. */
-  def profileD4R(dir: String): Unit = {
-    val spark = GraftSession()
-    val docs = Tables.documents(spark, dir)
-    docs.count() // warm
-    val codes = graft.dedup.Dedup.simHash(docs).persist()
-    t("d4 codes (simHash agg)")(codes)
-    t("d4 survivors r=1 (join+verify, no distinct)")(
-      graft.dedup.Dedup.simHashSurvivorsRaw(codes, 10, 1))
-    t("d4 survivors r=2 (join+verify, no distinct)")(
-      graft.dedup.Dedup.simHashSurvivorsRaw(codes, 10, 2))
-    codes.unpersist()
-    for (r <- Seq(1, 2, 0)) {
-      t(s"d4 maxHamming=10 r=$r")(graft.dedup.Dedup.simHashPairsR(docs, 10, r))
-      graft.util.Caches.releaseAll()
-    }
-    spark.stop()
-  }
-
-  /** Candidate-volume report behind the d4 r-choice cost model: exact
-    * Σ C(bucket,2) join-row counts for r=1 vs r=2 at both thresholds. */
-  def profileD4Volumes(dir: String): Unit = {
-    val spark = GraftSession()
-    val docs = Tables.documents(spark, dir)
-    val codes = graft.dedup.Dedup.simHash(docs).persist()
-    val n = codes.count()
-    for (k <- Seq(10, 3); r <- Seq(1, 2)) {
-      val agg = graft.dedup.Dedup.simHashCandidatesRaw(codes, k, r)
-      println(s"n=$n maxHamming=$k r=$r inputRows=${agg._2} joinRows=${agg._1}")
-    }
-    spark.stop()
-  }
-
-  /** Stage-by-stage timing of g1b_ppr at bench parallelism. */
-  def profileG1b(dir: String): Unit = {
-    val spark = GraftSession()
-    val li = Tables.lineitem(spark, dir).select("l_orderkey", "l_suppkey")
-    val ord = Tables.orders(spark, dir).select("o_orderkey", "o_custkey")
-    li.count(); ord.count() // warm
-    val pw = li.join(ord, li("l_orderkey") === ord("o_orderkey"))
-      .groupBy((col("o_custkey") * 2).as("c"), (col("l_suppkey") * 2 + 1).as("s"))
-      .agg(countDistinct("o_orderkey").as("w"))
-    t("pw (pair weights)")(pw)
-    val edges = pw.select(col("c").as("src"), col("s").as("dst"), col("w"))
-      .unionByName(pw.select(col("s").as("src"), col("c").as("dst"), col("w")))
-    t("edges")(edges)
-    val t0 = System.nanoTime()
-    val n = graft.operators.Graph.personalizedPageRank(edges,
-      Tables.customer(spark, dir).filter(col("c_mktsegment") === "BUILDING")
-        .select((col("c_custkey") * 2).as("id")), 5).count()
-    println(f"${(System.nanoTime() - t0) / 1e9}%8.2fs  ppr 5 iters ($n rows)")
-    t("g1b end-to-end")(graft.operators.Graph.g1bPersonalized(spark, dir))
-    spark.stop()
-  }
-
-  /** Stage-by-stage timing of g2_triangles at bench parallelism. */
-  /** d10 stage decomposition: shingles/bands build vs candidate join vs
-    * the pairsCommon verify — which term owns the 27 s at sf10? */
-  /** Candidate-volume effect of the d11b PPJoin positional filter: the
-    * distinct (a, b) candidate count the verify stage receives, with and
-    * without the WWW'08 positional bound, plus the raw prefix-index match
-    * rows the filter prunes before the distinct. Replicates
-    * containmentPairsPrefix's candidate build verbatim at τ = 0.6. */
-  /** Recall of the PQ/IVFADC tiers vs exact brute force at a given Lloyd
-    * iteration count — iters=0 IS the round-13 sampled-init codebook (same
-    * md5 anchor set as the old fit), so the iters=0 vs iters=2 delta is
-    * the measured quality gain behind the PqSpec/IvfPqSpec floor raise. */
-  def profilePqRecall(dir: String): Unit = {
-    val spark = GraftSession()
-    import graft.similarity.{Knn, Pq}
-    val emb = Tables.embeddings(spark, dir)
-    val n = emb.count()
-    val exact = Knn.bruteForceTopK(emb, 5).select("a_id", "b_id")
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val nlist = math.max(4, math.ceil(math.sqrt(n.toDouble)).toInt)
-    val nprobe = math.max(2, nlist / 4)
-    val ksub = Pq.ksubFor(n)
-    def recall(df: DataFrame): Double = {
-      val got = df.select("a_id", "b_id").collect()
-        .map(r => (r.getLong(0), r.getLong(1))).toSet
-      (exact & got).size.toDouble / exact.size
-    }
-    println(s"n=$n nlist=$nlist nprobe=$nprobe ksub=$ksub queries=${exact.size / 5}")
-    for (iters <- Seq(0, 1, 2, 4)) {
-      val cb = Pq.fitCodebook(emb, ksub, iters)
-      println(f"s8  iters=$iters recall=${recall(Pq.pqTopK(emb, cb, 5, 8))}%.4f")
-      println(f"s9  iters=$iters recall=${
-        recall(Pq.ivfPqTopK(emb, nlist, nprobe, ksub, 5, 8, iters = iters))}%.4f")
-      println(f"s9b iters=$iters recall=${
-        recall(Pq.twoLevelIvfPqTopK(emb, nlist, nprobe, ksub, 5, 8, iters = iters))}%.4f")
-      graft.util.Caches.releaseAll()
-    }
-    // multi-assign width scan at the production Lloyd setting (ma = ncoarse
-    // makes the union ALL cells — the hierarchical assignment degenerates
-    // to flat, so the row must match s9 and anchors the curve's ceiling)
-    val ncoarse = math.max(2, math.ceil(math.sqrt(nlist.toDouble)).toInt)
-    for (ma <- 1 to ncoarse) {
-      println(f"s9b multiAssign=$ma recall=${
-        recall(Pq.twoLevelIvfPqTopK(emb, nlist, nprobe, ksub, 5, 8,
-          multiAssign = ma))}%.4f")
-      graft.util.Caches.releaseAll()
-    }
-    spark.stop()
-  }
-
-  /** The s9b width router's raw inputs on a given tier: the rank
-    * histogram of each sampled vector's flat-optimal coarse group, the
-    * cumulative coverage per candidate width, and the width the router
-    * picks — the calibration evidence behind multiAssignCoveragePct. */
-  def profileMaWidth(dir: String): Unit = {
-    val spark = GraftSession()
-    import graft.similarity.{Knn, Pq}
-    import org.apache.spark.sql.expressions.Window
-    val emb = Tables.embeddings(spark, dir)
-    val n = emb.count()
-    val nlist = math.max(4, math.ceil(math.sqrt(n.toDouble)).toInt)
-    val ncoarse = math.max(2, math.ceil(math.sqrt(nlist.toDouble)).toInt)
-    val ak = graft.dedup.Dedup.md5Hash60(
-      concat(lit("ivfanchor|"), col("vec_id").cast("string")))
-    val ranked = graft.util.Caches.scoped(emb
-      .select(col("vec_id").as("cell"), col("embedding").as("ce"), ak.as("ak"))
-      .orderBy(col("ak"), col("cell")).limit(nlist)
-      .withColumn("r", row_number().over(Window.orderBy(col("ak"), col("cell"))))
-      .select("cell", "ce", "r"))
-    val coarse = ranked.filter(col("r") <= ncoarse)
-      .select(col("cell").as("g"), col("ce").as("cg"))
-    val fineGroups = ranked.select(col("cell"), col("ce"))
-      .crossJoin(broadcast(coarse))
-      .select(col("cell"), col("ce"), col("g"),
-        Knn.dotFold(col("ce"), col("cg")).as("gd"))
-      .groupBy("cell")
-      .agg(max_by(col("g"), struct(col("gd"), (-col("g")).as("ng"))).as("g"),
-        first(col("ce")).as("ce"))
-    println(s"n=$n nlist=$nlist ncoarse=$ncoarse")
-    val hist = Pq.multiAssignHistogram(emb, ranked, coarse, fineGroups)
-    val total = hist.values.sum
-    var cum = 0L
-    (1 to ncoarse).foreach { r =>
-      cum += hist.getOrElse(r, 0L)
-      println(f"rank=$r count=${hist.getOrElse(r, 0L)} coverage=${cum * 100.0 / total}%.1f%%")
-    }
-    val w = Pq.chooseWidth(hist, ncoarse)
-    println(s"router picks ma=$w (coverage bar ${Pq.multiAssignCoveragePct}%, cap ${Pq.coarseMultiAssign})")
-    spark.stop()
-  }
-
-  /** s9b multi-assign diagnostics: how many corpus vectors' FINE CELL
-    * differs between (a) flat argmax over all nlist anchors (s9's rule),
-    * (b) top-1-coarse-group hierarchical (round-14 s9b), and (c) the
-    * top-2-coarse union (round-15 s9b) — quantifies how much of the flat
-    * assignment the multi-assign recovers. */
-  def profileS9bDiag(dir: String): Unit = {
-    val spark = GraftSession()
-    import spark.implicits._
-    import graft.similarity.{Knn, Pq}
-    import org.apache.spark.sql.expressions.Window
-    val emb = Tables.embeddings(spark, dir)
-    val n = emb.count()
-    val nlist = math.max(4, math.ceil(math.sqrt(n.toDouble)).toInt)
-    val ncoarse = math.max(2, math.ceil(math.sqrt(nlist.toDouble)).toInt)
-    val ak = graft.dedup.Dedup.md5Hash60(
-      concat(lit("ivfanchor|"), col("vec_id").cast("string")))
-    val ranked = graft.util.Caches.scoped(emb
-      .select(col("vec_id").as("cell"), col("embedding").as("ce"), ak.as("ak"))
-      .orderBy(col("ak"), col("cell")).limit(nlist)
-      .withColumn("r", row_number().over(Window.orderBy(col("ak"), col("cell"))))
-      .select("cell", "ce", "r"))
-    val coarse = ranked.filter(col("r") <= ncoarse)
-      .select(col("cell").as("g"), col("ce").as("cg"))
-    val fineGroups = ranked.select(col("cell"), col("ce"))
-      .crossJoin(broadcast(coarse))
-      .select(col("cell"), col("ce"), col("g"),
-        Knn.dotFold(col("ce"), col("cg")).as("gd"))
-      .groupBy("cell")
-      .agg(max_by(col("g"), struct(col("gd"), (-col("g")).as("ng"))).as("g"),
-        first(col("ce")).as("ce"))
-    // flat: argmax over ALL fine anchors
-    val flat = emb.select(col("vec_id"), col("embedding"))
-      .crossJoin(broadcast(ranked.select(col("cell"), col("ce"))))
-      .select(col("vec_id"),
-        Knn.dotFold(col("embedding"), col("ce")).as("fd"), col("cell"))
-      .groupBy("vec_id")
-      .agg(max_by(col("cell"), struct(col("fd"), (-col("cell")).as("nc"))).as("cell_flat"))
-    // hierarchical with k coarse groups
-    def hier(k: Int) = emb.select(col("vec_id"), col("embedding"))
-      .crossJoin(broadcast(coarse))
-      .select(col("vec_id"), col("embedding"), col("g"),
-        Knn.dotFold(col("embedding"), col("cg")).as("cd"))
-      .groupBy("vec_id")
-      .agg(slice(array_sort(collect_list(struct((-col("cd")).as("ncd"), col("g")))),
-          1, k).as("top"),
-        first(col("embedding")).as("embedding"))
-      .select(col("vec_id"), col("embedding"), explode(col("top.g")).as("g"))
-      .join(broadcast(fineGroups.select(col("g"), col("cell"), col("ce"))), "g")
-      .select(col("vec_id"),
-        Knn.dotFold(col("embedding"), col("ce")).as("fd"), col("cell"))
-      .groupBy("vec_id")
-      .agg(max_by(col("cell"), struct(col("fd"), (-col("cell")).as("nc"))).as("cell_h"))
-    println(s"n=$n nlist=$nlist ncoarse=$ncoarse")
-    for (k <- Seq(1, 2, 3)) {
-      val diff = flat.join(hier(k), "vec_id")
-        .filter(col("cell_flat") =!= col("cell_h")).count()
-      println(f"top-$k coarse: $diff of $n vectors land OFF the flat-optimal cell (${100.0 * diff / n}%.1f%%)")
-    }
-    spark.stop()
-  }
-
-  /** s8 stage decomposition (round 16): where does the single fat task go?
-    * Times each sub-frame of pqTopK with a count, then the full query. */
-  def profileS8(dir: String): Unit = {
-    val spark = GraftSession()
-    import graft.similarity.{Knn, Pq}
-    import org.apache.spark.sql.expressions.Window
-    val emb = Tables.embeddings(spark, dir)
-    val n = emb.count()
-    val ksub = Pq.ksubFor(n)
-    for (pass <- 1 to 2) {
-      graft.util.Caches.releaseAll(); System.gc(); Thread.sleep(300)
-      var tPrev = System.nanoTime()
-      def mark(name: String): Unit = {
-        val now = System.nanoTime()
-        println(f"[s8 $pass] ${(now - tPrev) / 1e9}%7.2fs  $name")
-        tPrev = now
-      }
-      val cb = Pq.fitCodebook(emb, ksub)
-      mark("fitCodebook (collect + Lloyd)")
-      import graft.functions.PqFunctions._
-      val codes = emb.select(col("vec_id").as("b_id"),
-        pq_encode(col("embedding"), cb, Pq.m, Pq.dsub).as("codes"))
-      codes.write.format("noop").mode("overwrite").save()
-      mark("codes (encode scan)")
-      val qlut = emb.join(broadcast(Knn.queryIds(emb)), "vec_id")
-        .select(col("vec_id").as("a_id"),
-          pq_lut(col("embedding"), cb, Pq.m, Pq.dsub).as("lut"))
-      qlut.write.format("noop").mode("overwrite").save()
-      mark("qlut")
-      val approx = codes.join(broadcast(qlut), col("a_id") =!= col("b_id"))
-        .select(col("a_id"), col("b_id"),
-          pq_adc(col("lut"), col("codes"), ksub).as("adot"))
-      approx.write.format("noop").mode("overwrite").save()
-      mark("approx (BNLJ + ADC) noop")
-      println(s"[s8 $pass] approx rows: ${approx.count()}")
-      mark("approx count")
-      val w1 = Window.partitionBy("a_id").orderBy(col("adot").desc, col("b_id").asc)
-      val cand = approx.withColumn("qrk", row_number().over(w1))
-        .filter(col("qrk") <= 40)
-        .select("a_id", "b_id", "adot")
-      cand.write.format("noop").mode("overwrite").save()
-      mark("cand (window top-k) noop")
-      val full = Pq.pqTopK(emb, cb, 5, 8)
-      println(s"[s8 $pass] full rows: ${full.count()}")
-      mark("full pqTopK")
-    }
-    spark.stop()
-  }
-
-  /** s8 ADC-join variants (round 16): current shape (wide BNLJ carrying the
-    * 16 KB lut per pair) vs narrow-BNLJ-then-equi-lut-attach. */
-  def profileS8Var(dir: String): Unit = {
-    val spark = GraftSession()
-    import graft.similarity.{Knn, Pq}
-    import graft.functions.PqFunctions._
-    val emb = Tables.embeddings(spark, dir)
-    val n = emb.count()
-    val ksub = Pq.ksubFor(n)
-    val cb = Pq.fitCodebook(emb, ksub)
-    val codes = emb.select(col("vec_id").as("b_id"),
-      pq_encode(col("embedding"), cb, Pq.m, Pq.dsub).as("codes"))
-    val qlut = emb.join(broadcast(Knn.queryIds(emb)), "vec_id")
-      .select(col("vec_id").as("a_id"),
-        pq_lut(col("embedding"), cb, Pq.m, Pq.dsub).as("lut"))
-    def run(name: String)(df: org.apache.spark.sql.DataFrame): Unit = {
-      for (pass <- 1 to 3) {
-        System.gc(); Thread.sleep(200)
-        val t0 = System.nanoTime()
-        df.write.format("noop").mode("overwrite").save()
-        println(f"[s8var] $name pass $pass: ${(System.nanoTime() - t0) / 1e9}%6.2fs")
-      }
-    }
-    // A: current shape
-    val a = codes.join(broadcast(qlut), col("a_id") =!= col("b_id"))
-      .select(col("a_id"), col("b_id"),
-        pq_adc(col("lut"), col("codes"), ksub).as("adot"))
-    run("A wide-BNLJ")(a)
-    // C: same join, no adc — ids only (does the join itself cost 7 s?)
-    val cVar = codes.join(broadcast(qlut), col("a_id") =!= col("b_id"))
-      .select(col("a_id"), col("b_id"))
-    run("C join-ids-only")(cVar)
-    // D: same join, one raw lut element (is ArrayData access the cost?)
-    val dVar = codes.join(broadcast(qlut), col("a_id") =!= col("b_id"))
-      .select(col("a_id"), col("b_id"), element_at(col("lut"), 1).as("x"))
-    run("D join+1-element")(dVar)
-    // E: same join, sum of 8 fixed lut elements via builtins
-    val eVar = codes.join(broadcast(qlut), col("a_id") =!= col("b_id"))
-      .select(col("a_id"), col("b_id"),
-        (0 until 8).map(j => element_at(col("lut"), j * ksub + 1)).reduce(_ + _).as("x"))
-    run("E join+8-elements")(eVar)
-    // F: adc against a repartitioned (parallel) stream side
-    val fVar = codes.repartition(32).join(broadcast(qlut), col("a_id") =!= col("b_id"))
-      .select(col("a_id"), col("b_id"),
-        pq_adc(col("lut"), col("codes"), ksub).as("adot"))
-    run("F adc 32-partition stream")(fVar)
-    // H: codes PERSISTED before the pair join — if fast, the defect is
-    // pq_encode re-evaluated per joined output row, not the adc
-    val codesP = codes.persist()
-    val h = codesP.join(broadcast(qlut), col("a_id") =!= col("b_id"))
-      .select(col("a_id"), col("b_id"),
-        pq_adc(col("lut"), col("codes"), ksub).as("adot"))
-    run("H persisted-codes")(h)
-    codesP.unpersist()
-    // I: qlut inputs also under suspicion? lut re-eval per output row would
-    // be 100 rows × 2000 matches — force only lut materialization
-    val qlutP = qlut.persist()
-    val iVar = codes.join(broadcast(qlutP), col("a_id") =!= col("b_id"))
-      .select(col("a_id"), col("b_id"),
-        pq_adc(col("lut"), col("codes"), ksub).as("adot"))
-    run("I persisted-qlut")(iVar)
-    qlutP.unpersist()
-    // G: pure JVM microbench of PqOps.adc on unsafe arrays — is the kernel
-    // itself slow, or only its evaluation context inside the plan?
-    locally {
-      import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
-      val lut = UnsafeArrayData.fromPrimitiveArray(Array.fill(8 * ksub)(1.0))
-      val cds = UnsafeArrayData.fromPrimitiveArray(Array.fill(8)(3))
-      var acc = 0.0
-      val t0 = System.nanoTime()
-      var i = 0
-      while (i < 200000) {
-        acc += graft.functions.PqOps.adc(lut, cds, ksub).doubleValue()
-        i += 1
-      }
-      println(f"[s8var] G jvm-adc 200k calls: ${(System.nanoTime() - t0) / 1e9}%6.3fs (acc=$acc)")
-    }
-    println("=== A plan ==="); a.explain("formatted")
-    spark.stop()
-  }
-
-  /** Cost of repeated Tables.load (file listing + parquet footer schema
-    * inference per call) vs a memoized DataFrame. */
-  def profileLoadCost(dir: String): Unit = {
-    val spark = GraftSession()
-    Tables.documents(spark, dir).count() // warm FS cache + codegen
-    for (pass <- 1 to 3) {
-      var t0 = System.nanoTime()
-      var i = 0
-      while (i < 100) { Tables.load(spark, dir, "lineitem"); i += 1 }
-      println(f"[loadcost] pass $pass: 100 fresh loads ${(System.nanoTime() - t0) / 1e9}%6.3fs")
-      val df = Tables.load(spark, dir, "lineitem")
-      t0 = System.nanoTime()
-      i = 0
-      while (i < 100) { df.select(col("l_orderkey")); i += 1 }
-      println(f"[loadcost] pass $pass: 100 memo reuses ${(System.nanoTime() - t0) / 1e9}%6.3fs")
-    }
-    spark.stop()
-  }
-
-  /** Dump .explain("formatted") of named driver queries to files under
-    * plans/r16/ — the optimization round's before/after plan evidence.
-    * Usage: runMain graft.Profile plans <suffix> <name>[,<name>...] */
+  /** Dump .explain("formatted") of named queries to
+    * plans/r16/<name>_<suffix>.txt — before/after plan evidence. */
   def profilePlans(dir: String, args: Array[String]): Unit = {
     val spark = GraftSession()
     val suffix = args.headOption.getOrElse("before")
@@ -519,16 +40,27 @@ object Profile {
     spark.stop()
   }
 
-  /** Round-16 optimization profiler: per-JOB wall-time breakdown of named
-    * driver queries at bench parallelism. A SparkListener records every
-    * job's submit→end span plus its stage/task counts; gaps between jobs
-    * are DRIVER time (planning, collect post-processing, oracle-SQL
-    * string building, Lloyd fits). Three passes per query, the same
-    * releaseAll/gc hygiene as Bench.once, so pass 3 is the quiet-state
-    * read. Usage: runMain graft.Profile jobs <name>[,<name>...] */
+  /** Milliseconds covered by at least one of the (start, end) spans. Jobs
+    * of one query can overlap, so summing their durations overcounts. */
+  def busyMs(spans: Seq[(Long, Long)]): Long = {
+    var total = 0L
+    var (curS, curE) = (Long.MinValue, Long.MinValue)
+    for ((s, e) <- spans.sortBy(_._1)) {
+      if (s > curE) { total += curE - curS; curS = s; curE = e }
+      else curE = math.max(curE, e)
+    }
+    total + (curE - curS)
+  }
+
+  /** Per-JOB wall-time breakdown of named queries at bench
+    * parallelism. A SparkListener records every job's submit→end span plus
+    * its stage/task counts; busy time is the union of those spans, and the
+    * rest of the wall time is spent on the Spark driver (planning,
+    * construction-time fits and counts, collect post-processing). Three
+    * passes per query, the same releaseAll/gc hygiene as Bench.once, so
+    * pass 3 is the quiet-state read; it also lists every job. */
   def profileJobs(dir: String, names: Array[String]): Unit = {
     val spark = GraftSession()
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted}
     val jobs = new java.util.concurrent.ConcurrentHashMap[Int, (Long, String, Int)]()
     val done = new java.util.concurrent.ConcurrentLinkedQueue[(Int, Long, Long, String, Int)]()
     @volatile var stageTasks = 0L
@@ -562,391 +94,15 @@ object Profile {
       // a short sleep is enough for a profiler)
       Thread.sleep(300)
       val js = done.toArray(Array.empty[(Int, Long, Long, String, Int)]).sortBy(_._2)
-      val jobTotal = js.map(j => j._3 - j._2).sum / 1e3
+      val busy = busyMs(js.map(j => (j._2, j._3)).toSeq) / 1e3
       println(f"== $name pass $pass: wall $wall%.2fs, ${js.length} jobs " +
-        f"(sum ${jobTotal}%.2fs), driver-gap ${wall - jobTotal}%.2fs, " +
+        f"(busy ${busy}%.2fs), driver-gap ${wall - busy}%.2fs, " +
         f"$stageTasks tasks, $n rows")
       if (pass == 3)
         js.foreach { case (id, s, e, desc, nst) =>
           println(f"   job $id%3d ${(e - s) / 1e3}%7.3fs stages=$nst  ${desc.take(90)}")
         }
     }
-    spark.stop()
-  }
-
-  /** j02 de-hinting attribution (round-15 VERDICT #3): times j02 and j02b
-    * over several spaced runs and dumps the FINAL adaptive plan's join
-    * strategies + exchange count, to separate the AQE
-    * shuffle-then-convert tax from measurement noise. */
-  def profileJ02Plan(dir: String): Unit = {
-    val spark = GraftSession()
-    import org.apache.spark.sql.execution.SparkPlan
-    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
-    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
-    import org.apache.spark.sql.execution.joins.{BroadcastHashJoinExec, ShuffledHashJoinExec, SortMergeJoinExec, BroadcastNestedLoopJoinExec}
-    Tables.documents(spark, dir).count() // warm the session
-    def nodes(p: SparkPlan): Seq[SparkPlan] = {
-      val kids = p match {
-        case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
-        case q: QueryStageExec => Seq(q.plan)
-        case other => other.children
-      }
-      p +: kids.flatMap(nodes)
-    }
-    for (name <- Seq("j02_twophase_enrich", "j02b_normalized_enrich")) {
-      val fn = SparkEntry.queries(name)
-      for (pass <- 1 to 3) {
-        graft.util.Caches.releaseAll(); System.gc(); Thread.sleep(500)
-        val t0 = System.nanoTime()
-        fn(spark, dir).count()
-        println(f"$name pass $pass: ${(System.nanoTime() - t0) / 1e9}%.2fs")
-      }
-      val df = fn(spark, dir)
-      df.count()
-      val all = nodes(df.queryExecution.executedPlan)
-      val joins = all.collect {
-        case _: BroadcastHashJoinExec => "BHJ"
-        case _: ShuffledHashJoinExec => "SHJ"
-        case _: SortMergeJoinExec => "SMJ"
-        case _: BroadcastNestedLoopJoinExec => "BNLJ"
-      }
-      val shuffles = all.count(_.isInstanceOf[ShuffleExchangeExec])
-      println(s"$name final adaptive plan: joins=${joins.groupBy(identity)
-        .map { case (k, v) => s"$k×${v.size}" }.toSeq.sorted.mkString(",")} " +
-        s"shuffleExchanges=$shuffles")
-    }
-    spark.stop()
-  }
-
-  def profilePpjoin(dir: String): Unit = {
-    val spark = GraftSession()
-    val tau = 0.6
-    val docs = Tables.documents(spark, dir)
-    docs.count() // warm
-    val sh = graft.util.Caches.scoped(
-      graft.text.TextAnalysis.shingleRows(docs))
-    val sizes = sh.groupBy("doc_id").agg(count(lit(1)).as("n"))
-    val freq = sh.groupBy("s").agg(count(lit(1)).as("df"))
-    val rarityOrder = org.apache.spark.sql.expressions.Window
-      .partitionBy("doc_id").orderBy("df", "s")
-    val ranked = graft.util.Caches.material(sh.join(freq, "s")
-      .withColumn("rank", row_number().over(rarityOrder))
-      .join(sizes, "doc_id"))
-    val prefixes = ranked
-      .filter(col("rank") <= col("n") - ceil(lit(tau) * col("n")) + 1)
-      .select(col("doc_id").as("a_id"), col("s"), col("n").as("na"),
-        col("rank").as("pa"))
-    val index = ranked.select(col("doc_id").as("b_id"), col("s").as("s2"),
-      col("n").as("nb"), col("rank").as("pb"))
-    val matches = prefixes.join(index, col("s") === col("s2"))
-      .filter(col("a_id") =!= col("b_id"))
-    t("prefix-index match rows (pre-filter)")(matches)
-    t("distinct candidates WITHOUT positional filter")(
-      matches.select("a_id", "b_id").distinct())
-    val kept = matches.filter(
-      (lit(1L) + least(col("na") - col("pa"), col("nb") - col("pb")))
-        .cast("double") / col("na") >= lit(tau))
-    t("match rows kept by positional filter")(kept)
-    t("distinct candidates WITH positional filter")(
-      kept.select("a_id", "b_id").distinct())
-  }
-
-  def profileD10(dir: String): Unit = {
-    val spark = GraftSession()
-    import graft.dedup.Dedup
-    val docs = Tables.documents(spark, dir)
-    docs.count() // warm
-    var t0 = System.nanoTime()
-    def mark(name: String): Unit = {
-      val now = System.nanoTime()
-      println(f"[d10] ${(now - t0) / 1e9}%8.2fs  $name")
-      t0 = now
-    }
-    val sh = graft.util.Caches.scoped(graft.text.TextAnalysis.shingleRows(docs))
-    println(s"[d10] shingle rows: ${sh.count()}")
-    mark("shingles built+counted")
-    val bands = graft.util.Caches.scoped(Dedup.minHashBands(sh))
-    println(s"[d10] band rows: ${bands.count()}")
-    mark("bands built+counted")
-    val probe = bands.filter(col("doc_id") % 10 === 0).toDF("a_id", "band", "sig")
-    val index = bands.filter(col("doc_id") % 10 =!= 0).toDF("b_id", "band2", "sig2")
-    val cand = probe
-      .join(index, col("band") === col("band2") && col("sig") === col("sig2"))
-      .select("a_id", "b_id").distinct()
-    println(s"[d10] candidates: ${cand.count()}")
-    mark("candidate join+distinct")
-    val n = Dedup.incrementalNearDupPairs(docs, 0.5).count()
-    mark(s"full d10 from cache ($n pairs)")
-    spark.stop()
-  }
-
-  /** s7 candidate-volume decomposition: is sf10→sf30 growth the pair
-    * budget (algorithmic) or the verify/execution regime? */
-  def profileS7Volume(dir: String): Unit = {
-    val spark = GraftSession()
-    import graft.similarity.Knn
-    val emb = Tables.embeddings(spark, dir)
-    val n = emb.count()
-    val bits = Knn.codeBits(n)
-    val t0 = System.nanoTime()
-    val codes = Knn.srpCodes(emb, bits)
-    val probes = (0 until bits).map(j => col("code").bitwiseXOR(lit(1L << j))) :+ col("code")
-    val qc = codes.select(col("id").as("a_id"), col("t"),
-      explode(array(probes: _*)).as("code"))
-    val bc = codes.toDF("b_id", "t", "code")
-    val joined = qc.join(bc, Seq("t", "code")).filter(col("a_id") =!= col("b_id"))
-    val rawPairs = joined.count()
-    val t1 = System.nanoTime()
-    val cand = joined.select("a_id", "b_id").distinct().count()
-    val t2 = System.nanoTime()
-    println(f"[s7vol] n=$n bits=$bits rawPairs=$rawPairs distinctCand=$cand " +
-      f"joinCount=${(t1 - t0) / 1e9}%.1fs distinct=${(t2 - t1) / 1e9}%.1fs")
-    spark.stop()
-  }
-
-  /** Stage timing of the CURRENT g2 implementation (round-11): where do
-    * the seconds go at sf0.1 after the probe-skip change? */
-  def profileG2Current(dir: String): Unit = {
-    val spark = GraftSession()
-    val li = Tables.lineitem(spark, dir)
-      .select(col("l_orderkey").as("ok"), col("l_partkey").as("pk"))
-    li.count() // warm
-    for (it <- 1 to 3) {
-    graft.util.Caches.releaseAll()
-    var tPrev = System.nanoTime()
-    def mark(name: String): Unit = {
-      val now = System.nanoTime()
-      println(f"[$it] ${(now - tPrev) / 1e9}%8.2fs  $name")
-      tPrev = now
-    }
-    val baskets = li.groupBy("ok").agg(sort_array(collect_set("pk")).as("ps"))
-    val edges = baskets
-      .select(explode(expr(
-        "flatten(transform(ps, (x, i) -> " +
-          "transform(slice(ps, i + 2, size(ps)), y -> struct(x AS u, y AS v))))"
-      )).as("e"))
-      .select(col("e.u").as("u"), col("e.v").as("v"))
-      .distinct()
-    val (e, mEdges) = graft.util.Caches.materialAdaptive(edges)
-    mark(s"materialAdaptive(edges) done, m=$mEdges")
-    val deg = e.select(explode(array(col("u"), col("v"))).as("x"))
-      .groupBy("x").agg(count(lit(1)).as("d"))
-    val key = (d: org.apache.spark.sql.Column, id: org.apache.spark.sql.Column) =>
-      d * lit(4294967296L) + id
-    val oriented = graft.util.Caches.materialKnown(e
-      .join(deg.select(col("x").as("u"), col("d").as("du")), "u")
-      .join(deg.select(col("x").as("v"), col("d").as("dv")), "v")
-      .select(
-        when(key(col("du"), col("u")) < key(col("dv"), col("v")),
-          struct(col("u").as("s"), col("v").as("t"),
-            key(col("dv"), col("v")).as("tk")))
-        .otherwise(struct(col("v").as("s"), col("u").as("t"),
-          key(col("du"), col("u")).as("tk"))).as("e"))
-      .select(col("e.s").as("s"), col("e.t").as("t"), col("e.tk").as("tk")), mEdges)
-    mark("oriented declared (lazy)")
-    val pack = (a: org.apache.spark.sql.Column, b: org.apache.spark.sql.Column) =>
-      a * lit(4294967296L) + b
-    val packedE = oriented.select(pack(col("s"), col("t")).as("ck"))
-    val bloom = packedE.stat.bloomFilter("ck",
-      math.max(1L, math.min(mEdges, 100000000L)), 0.01)
-    mark("bloom built (materializes oriented)")
-    val bloomBc = spark.sparkContext.broadcast(bloom)
-    val mightClose = (ck: org.apache.spark.sql.Column) =>
-      graft.functions.GraftFunctions.bloom_probe(ck, bloomBc)
-    val defaultParts = spark.conf.get("spark.sql.shuffle.partitions").toInt
-    val closeParts = math.max(defaultParts, (mEdges / 300000L).toInt + 1)
-    def close(wedges: org.apache.spark.sql.DataFrame): Long = {
-      val closed = wedges.filter(mightClose(col("ck")))
-        .repartition(closeParts, col("ck"))
-        .join(packedE.repartition(closeParts, col("ck")).hint("SHUFFLE_HASH"), "ck")
-      closed
-        .select(explode(array(col("s"),
-          expr("ck div 4294967296"), pmod(col("ck"), lit(4294967296L)))).as("part"))
-        .groupBy("part").agg(count(lit(1)).as("n_triangles"))
-        .count()
-    }
-    // A: self-join wedges (round-10 shape)
-    val w1 = oriented.select(col("s"), col("t").as("t1"), col("tk").as("k1"))
-      .repartition(closeParts, col("s"))
-    val w2 = oriented.select(col("s"), col("t").as("t2"), col("tk").as("k2"))
-      .repartition(closeParts, col("s"))
-    val wedgesA = w1.join(w2, Seq("s")).filter(col("k1") < col("k2"))
-      .select(col("s"), pack(col("t1"), col("t2")).as("ck"))
-    val nA = close(wedgesA)
-    mark(s"A self-join wedges ($nA parts)")
-    // B: adjacency in-array wedges (round-11 shape)
-    val adjO = oriented
-      .repartition(closeParts, col("s"))
-      .groupBy("s")
-      .agg(sort_array(collect_list(struct(col("tk"), col("t")))).as("ns"))
-    val wedgesB = adjO
-      .select(col("s"), explode(expr(
-        "flatten(transform(ns, (x, i) -> " +
-          "transform(slice(ns, i + 2, size(ns)), y -> struct(x.t AS t1, y.t AS t2))))"
-      )).as("w"))
-      .select(col("s"), pack(col("w.t1"), col("w.t2")).as("ck"))
-    val nB = close(wedgesB)
-    mark(s"B adjacency wedges ($nB parts)")
-    val nA2 = close(wedgesA)
-    mark(s"A again ($nA2 parts)")
-    val nB2 = close(wedgesB)
-    mark(s"B again ($nB2 parts)")
-    }
-    spark.stop()
-  }
-
-  /** Round-12 dispatcher proof (VERDICT #4): time each family's DECIDING
-    * STATISTIC standalone at the given SF (the conservative upper bound —
-    * in the real dispatchers the d2c shingle frame is cache-shared with
-    * the chosen variant, and d9c/s3d reuse Tables.cachedCount) and print
-    * the ROUTED CHOICE, so the sf10 claims "stat cost < 10% of winner"
-    * and "route matches the measured winner" are both direct reads. */
-  def profileDispatchStats(dir: String): Unit = {
-    val spark = GraftSession()
-    val docs = Tables.documents(spark, dir)
-    docs.count() // warm file listing + footers
-    for (it <- 1 to 3) {
-      graft.util.Caches.releaseAll()
-      var tPrev = System.nanoTime()
-      def mark(name: String): Unit = {
-        val now = System.nanoTime()
-        println(f"[dispatch $it] ${(now - tPrev) / 1e9}%8.2fs  $name")
-        tPrev = now
-      }
-      // d2c: the REAL chooser (count + md5 doc sample + shingle df
-      // aggregate with the thinning correction) — its returned frame is
-      // lazy, so only the statistic jobs execute inside the mark
-      val (d2route, _) = graft.dedup.Dedup.ngramJaccardChoose(docs, 0.5)
-      mark(s"d2c stat (sampled chooser) -> route $d2route")
-      // d9c / s3d: corpus cardinality (a raw count job — NOT the memo,
-      // time the real work the first invocation pays)
-      val n = Tables.embeddings(spark, dir).count()
-      val d9route = graft.dedup.SemDedup.chooseSemDedup(n)
-      val s3route = graft.similarity.Ivf.chooseAnchorIvf(n)
-      mark(s"d9c/s3d stat n=$n -> d9c route $d9route, s3d route $s3route")
-    }
-    spark.stop()
-  }
-
-  /** Round-12 g2 floor decision (VERDICT #8): serialized action-boundary
-    * latencies of the CURRENT implementation at sf0.1, plus a bloom-less
-    * close variant — is any stage cuttable, or is the remainder a floor?
-    * Stages: (1) baskets→edges→materialAdaptive count; (2) bloom build
-    * (the pass that also materializes `oriented`); (3) adjacency + wedge
-    * generators + bloom probe + close join + final rollup, one action;
-    * (4) the same close WITHOUT the bloom probe (is the prune still a win
-    * at this scale, i.e. is cutting it a pessimization?). */
-  def profileG2Floor(dir: String): Unit = {
-    val spark = GraftSession()
-    val li = Tables.lineitem(spark, dir)
-      .select(col("l_orderkey").as("ok"), col("l_partkey").as("pk"))
-    li.count() // warm
-    for (it <- 1 to 3) {
-      graft.util.Caches.releaseAll()
-      var tPrev = System.nanoTime()
-      def mark(name: String): Unit = {
-        val now = System.nanoTime()
-        println(f"[g2floor $it] ${(now - tPrev) / 1e9}%8.2fs  $name")
-        tPrev = now
-      }
-      val baskets = li.groupBy("ok").agg(sort_array(collect_set("pk")).as("ps"))
-      val edges = baskets
-        .select(explode(expr(
-          "flatten(transform(ps, (x, i) -> " +
-            "transform(slice(ps, i + 2, size(ps)), y -> struct(x AS u, y AS v))))"
-        )).as("e"))
-        .select(col("e.u").as("u"), col("e.v").as("v"))
-        .distinct()
-      val (e, mEdges) = graft.util.Caches.materialAdaptive(edges)
-      mark(s"1 edges+materialAdaptive (m=$mEdges)")
-      val deg = e.select(explode(array(col("u"), col("v"))).as("x"))
-        .groupBy("x").agg(count(lit(1)).as("d"))
-      val key = (d: org.apache.spark.sql.Column, id: org.apache.spark.sql.Column) =>
-        d * lit(4294967296L) + id
-      val oriented = graft.util.Caches.materialKnown(e
-        .join(deg.select(col("x").as("u"), col("d").as("du")), "u")
-        .join(deg.select(col("x").as("v"), col("d").as("dv")), "v")
-        .select(
-          when(key(col("du"), col("u")) < key(col("dv"), col("v")),
-            struct(col("u").as("s"), col("v").as("t"),
-              key(col("dv"), col("v")).as("tk")))
-          .otherwise(struct(col("v").as("s"), col("u").as("t"),
-            key(col("du"), col("u")).as("tk"))).as("e"))
-        .select(col("e.s").as("s"), col("e.t").as("t"), col("e.tk").as("tk")), mEdges)
-      val pack = (a: org.apache.spark.sql.Column, b: org.apache.spark.sql.Column) =>
-        a * lit(4294967296L) + b
-      val packedE = oriented.select(pack(col("s"), col("t")).as("ck"))
-      val bloom = packedE.stat.bloomFilter("ck",
-        math.max(1L, math.min(mEdges, 100000000L)), 0.01)
-      mark("2 bloom build (materializes oriented)")
-      val bloomBc = spark.sparkContext.broadcast(bloom)
-      val defaultParts = spark.conf.get("spark.sql.shuffle.partitions").toInt
-      val closeParts = math.max(defaultParts, (mEdges / 300000L).toInt + 1)
-      val adjO = oriented
-        .repartition(closeParts, col("s"))
-        .groupBy("s")
-        .agg(sort_array(collect_list(struct(col("tk"), col("t")))).as("ns"))
-      val wedges = adjO
-        .select(col("s"), col("ns"), posexplode(col("ns")))
-        .select(col("s"), col("col.t").as("t1"),
-          explode(expr("transform(slice(ns, pos + 2, size(ns)), y -> y.t)")).as("t2"))
-        .select(col("s"), pack(col("t1"), col("t2")).as("ck"))
-      def close(pruned: org.apache.spark.sql.DataFrame): Long =
-        pruned
-          .repartition(closeParts, col("ck"))
-          .join(packedE.repartition(closeParts, col("ck")).hint("SHUFFLE_HASH"), "ck")
-          .select(explode(array(col("s"),
-            expr("ck div 4294967296"), pmod(col("ck"), lit(4294967296L)))).as("part"))
-          .groupBy("part").agg(count(lit(1)).as("n_triangles"))
-          .count()
-      val n1 = close(wedges.filter(
-        graft.functions.GraftFunctions.bloom_probe(col("ck"), bloomBc)))
-      mark(s"3 wedges+bloomprobe+close+rollup ($n1 parts)")
-      val n2 = close(wedges)
-      mark(s"4 same close WITHOUT bloom ($n2 parts)")
-    }
-    spark.stop()
-  }
-
-  def profileG2(dir: String): Unit = {
-    val spark = GraftSession()
-    val li = Tables.lineitem(spark, dir)
-      .select(col("l_orderkey").as("ok"), col("l_partkey").as("pk"))
-    li.count() // warm
-    val edgesPlan = li.as("a").join(li.as("b"),
-        col("a.ok") === col("b.ok") && col("a.pk") < col("b.pk"))
-      .select(col("a.pk").as("u"), col("b.pk").as("v"))
-      .distinct()
-    t("edges derivation")(edgesPlan)
-    val edges = edgesPlan.localCheckpoint()
-    val deg = edges.select(explode(array(col("u"), col("v"))).as("x"))
-      .groupBy("x").agg(count(lit(1)).as("d"))
-    t("deg")(deg)
-    val key = (d: org.apache.spark.sql.Column, id: org.apache.spark.sql.Column) =>
-      d * lit(4294967296L) + id
-    val orientedPlan = edges
-      .join(deg.select(col("x").as("u"), col("d").as("du")), "u")
-      .join(deg.select(col("x").as("v"), col("d").as("dv")), "v")
-      .select(
-        when(key(col("du"), col("u")) < key(col("dv"), col("v")),
-          struct(col("u").as("s"), col("v").as("t"),
-            key(col("dv"), col("v")).as("tk")))
-        .otherwise(struct(col("v").as("s"), col("u").as("t"),
-          key(col("du"), col("u")).as("tk"))).as("e"))
-      .select(col("e.s").as("s"), col("e.t").as("t"), col("e.tk").as("tk"))
-    t("oriented build")(orientedPlan)
-    val oriented = orientedPlan.localCheckpoint()
-    val w1 = oriented.select(col("s"), col("t").as("t1"), col("tk").as("k1"))
-    val w2 = oriented.select(col("s"), col("t").as("t2"), col("tk").as("k2"))
-    val wedges = w1.join(w2, Seq("s")).filter(col("k1") < col("k2"))
-    t("wedges (generate only)")(wedges)
-    val closed = wedges.join(
-      oriented.select(col("s").as("t1"), col("t").as("t2")), Seq("t1", "t2"))
-    t("closing join")(closed)
-    t("per-part counts")(closed
-      .select(explode(array(col("s"), col("t1"), col("t2"))).as("part"))
-      .groupBy("part").agg(count(lit(1)).as("n_triangles")))
-    t("g2 end-to-end (current impl)")(graft.operators.Graph.g2Triangles(spark, dir))
     spark.stop()
   }
 }

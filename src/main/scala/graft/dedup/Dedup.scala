@@ -79,7 +79,7 @@ object Dedup {
     val sizes = sh.groupBy("doc_id").agg(count(lit(1)).as("n"))
     val freq = sh.groupBy("s").agg(count(lit(1)).as("df"))
     val rarityOrder = Window.partitionBy("doc_id").orderBy("df", "s")
-    // NOT materialized (round 16, measured): an eager materialAdaptive here
+    // NOT persisted (round 16, measured): an eager persist + count here
     // cost more than the duplicated derivation it saved — and worse, it
     // executes at query-CONSTRUCTION time, so consumers whose final action
     // prunes this subtree entirely (d6's unique-key left join under the
@@ -175,18 +175,10 @@ object Dedup {
     val freq = sh.groupBy("s").agg(count(lit(1)).as("df"))
     val rarityOrder = Window.partitionBy("doc_id").orderBy("df", "s")
     // every shingle's 1-based rank in ITS doc under the GLOBAL rarity
-    // order — built once, MATERIALIZED (parquet spill, not block-manager
-    // persist): the frame is corpus-scaled (all shingle rows + rank), and
-    // a block-manager cache of it squats the storage region 32 shuffle
-    // sorters need — the measured sf10 failure (UNABLE_TO_ACQUIRE_MEMORY
-    // on the first r13 campaign attempt, rescued only by the retry). The
-    // prefix side filters it, the index side reads it whole, and the
-    // shared order is what makes the PPJoin positional bound below valid.
-    // (Round-16 A/B: materialAdaptive — cache below 5M rows — measured
-    // NEUTRAL here, 4.04 s material vs 4.08/4.40 adaptive at sf0.1; the
-    // cache-population count pass costs what the parquet round trip costs
-    // on this frame, so the r13-measured form stays.)
-    val ranked = graft.util.Caches.material(sh.join(freq, "s")
+    // order; the shared order is what makes the PPJoin positional bound
+    // below valid.
+    // persisted: the prefix side filters it and the index side reads it whole
+    val ranked = graft.util.Caches.scoped(sh.join(freq, "s")
       .withColumn("rank", row_number().over(rarityOrder))
       .join(sizes, "doc_id"))
     val prefixes = ranked
@@ -568,53 +560,14 @@ object Dedup {
     * decisively right. */
   private val comboInputWeight = 4L
 
-  /** The combo join + inline Hamming verify WITHOUT the survivor dedup —
-    * Profile uses it to separate join cost from distinct cost. */
-  def simHashSurvivorsRaw(codes: DataFrame, maxHamming: Int, r: Int): DataFrame = {
-    val rows = comboRows(codes, maxHamming, r).drop("md")
-    rows.toDF("a_id", "ha", "cmb", "bv")
-      .join(rows.toDF("b_id", "hb", "cmb", "bv").hint("SHUFFLE_HASH"),
-        Seq("cmb", "bv"))
-      .filter(col("a_id") < col("b_id"))
-      .withColumn("hamming", bit_count(expr("ha ^ hb")).cast("bigint"))
-      .filter(col("hamming") <= maxHamming)
-      .select("a_id", "b_id", "hamming")
-  }
-
-  /** [[simHashSurvivorsRaw]] with explicit join parallelism — Profile's
-    * partitioning experiment. */
-  def simHashSurvivorsParts(codes: DataFrame, maxHamming: Int, r: Int,
-                            parts: Int): DataFrame = {
-    val rows = comboRows(codes, maxHamming, r).drop("md")
-    rows.toDF("a_id", "ha", "cmb", "bv").repartition(parts, col("cmb"), col("bv"))
-      .join(rows.toDF("b_id", "hb", "cmb", "bv")
-        .repartition(parts, col("cmb"), col("bv")).hint("SHUFFLE_HASH"),
-        Seq("cmb", "bv"))
-      .filter(col("a_id") < col("b_id"))
-      .withColumn("hamming", bit_count(expr("ha ^ hb")).cast("bigint"))
-      .filter(col("hamming") <= maxHamming)
-      .select("a_id", "b_id", "hamming")
-  }
-
   /** (joinRows, inputRows) of the r-decomposition without running the join —
-    * the exact quantities the r-choice cost model weighs, exposed for Profile's
-    * volume report. */
+    * the exact quantities the r-choice cost model weighs. */
   def simHashCandidatesRaw(codes: DataFrame, maxHamming: Int, r: Int): (Long, Long) = {
     val agg = comboRows(codes, maxHamming, r).groupBy("cmb", "bv")
       .agg(count(lit(1)).as("c"))
       .agg(sum(expr("c * (c - 1) DIV 2")).as("vol"), sum(col("c")).as("rows"))
       .head()
     (agg.getLong(0), agg.getLong(1))
-  }
-
-  /** The pigeonhole candidate stage of [[simHashPairsR]], exposed so Profile
-    * can report candidate volume vs n²/2. `codes` = (doc_id, simhash). */
-  def simHashCandidates(codes: DataFrame, maxHamming: Int, r: Int = 1): DataFrame = {
-    val rows = comboRows(codes, maxHamming, r).select("doc_id", "cmb", "bv")
-    rows.toDF("a_id", "cmb", "bv")
-      .join(rows.toDF("b_id", "cmb", "bv"), Seq("cmb", "bv"))
-      .filter(col("a_id") < col("b_id"))
-      .select("a_id", "b_id").distinct()
   }
 
   // ---- oracle-checked queries --------------------------------------------

@@ -10,107 +10,16 @@ import org.apache.spark.sql.DataFrame
 object Caches {
   private val frames = new java.util.concurrent.ConcurrentLinkedQueue[DataFrame]()
 
+  /** Lazy: `persist()` only marks the plan, so building a query runs no job
+    * and the first action that reads the frame fills the cache. */
   def scoped(df: DataFrame): DataFrame = {
     df.persist()
     frames.add(df)
     df
   }
 
-  private val dirs = new java.util.concurrent.ConcurrentLinkedQueue[java.nio.file.Path]()
-
-  /** Materialize a corpus-scaled intermediate OUTSIDE the block manager:
-    * write it as compressed parquet and hand back a scan of the file.
-    * Block-manager caching (any storage level) competes with execution for
-    * the unified pool — at 100M+ rows the cached blocks squat the protected
-    * storage region and 32 concurrent shuffle sorters thrash against what's
-    * left ("Unable to acquire 32768 bytes, got 0", measured on g2's sf10
-    * run even with MEMORY_AND_DISK_SER). A parquet spill costs one write
-    * plus columnar re-scans, keeps ZERO bytes of heap between stages, and
-    * is exactly what a production job does when it checkpoints a reused
-    * intermediate to the cluster FS. Honors an explicit checkpoint dir when
-    * the session has one (the cluster case — local temp would not be shared
-    * across executors); falls back to a process-local temp dir. */
-  def material(df: DataFrame): DataFrame = {
-    val spark = df.sparkSession
-    val base = spark.sparkContext.getCheckpointDir match {
-      case Some(cp) => new org.apache.hadoop.fs.Path(cp, "graft-mat-" +
-        java.util.UUID.randomUUID().toString.take(12)).toString
-      case None =>
-        // The temp-dir fallback is only sound when driver and executors
-        // share a filesystem: on a real cluster each task would write its
-        // split to ITS OWN local disk and the follow-up read on the driver
-        // would see a subset of the rows — silently wrong results, not an
-        // error. Enforce the documented boundary instead of risking that.
-        require(spark.sparkContext.isLocal,
-          "Caches.material: no checkpoint dir configured on a non-local " +
-            "cluster; a driver-local temp dir would scatter task output " +
-            "across executor disks. Call sc.setCheckpointDir(<shared path>).")
-        val p = java.nio.file.Files.createTempDirectory("graft-mat-")
-        dirs.add(p)
-        p.toString
-    }
-    df.write.mode("overwrite").parquet(base)
-    spark.read.parquet(base)
-  }
-
-  /** Rows above which [[materialAdaptive]] spills to parquet instead of the
-    * block manager. Below it the frame is a few hundred MB at most —
-    * caching is strictly cheaper (no write + columnar re-decode) and too
-    * small to squat the unified pool; above it the parquet round-trip is
-    * what keeps the heap clear for the consumer stages' sorters (the
-    * measured sf10 g2 failure mode). */
-  val materialRowThreshold: Long = 5000000L
-
-  /** Size-conditional [[material]]: persist, count (one pass — the count
-    * both materializes the cache and measures it), then keep the cached
-    * frame when small or stream it out to parquet (a cache read, not a
-    * re-derivation) and release the cache when large. Returns the frame to
-    * consume plus the measured row count so callers that need the
-    * cardinality anyway (g2 sizes its join partitioning from it) don't pay
-    * a second count job. */
-  def materialAdaptive(df: DataFrame): (DataFrame, Long) = {
-    // Deserialized MEMORY_AND_DISK: the small path re-reads this frame up
-    // to five times — a SER cache would pay a full decode per read. The
-    // large path unpersists right after the parquet write, so the
-    // deserialized footprint is transient even at corpus scale.
-    val cached = df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val n = cached.count()
-    if (n <= materialRowThreshold) {
-      frames.add(cached)
-      (cached, n)
-    } else {
-      val out = material(cached)
-      cached.unpersist(blocking = false)
-      (out, n)
-    }
-  }
-
-  /** [[materialAdaptive]] when the caller ALREADY KNOWS the cardinality
-    * (e.g. a 1:1 projection of a frame that was just counted): skips the
-    * persist+count probe entirely — the measured ~2× small-scale overhead
-    * on g2 at sf0.1, where the probe's blocking materialization pass cost
-    * as much as the work it gated. Small path: lazy cache, the first
-    * consumer materializes it; large path: straight parquet write, no
-    * block-manager round-trip at all. */
-  def materialKnown(df: DataFrame, n: Long): DataFrame =
-    if (n <= materialRowThreshold) {
-      val cached = df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      frames.add(cached)
-      cached
-    } else material(df)
-
   def releaseAll(): Unit = {
     var f = frames.poll()
     while (f != null) { f.unpersist(blocking = false); f = frames.poll() }
-    var d = dirs.poll()
-    while (d != null) {
-      try {
-        val walk = java.nio.file.Files.walk(d)
-        try walk.sorted(java.util.Comparator.reverseOrder())
-          .forEach(p => java.nio.file.Files.deleteIfExists(p))
-        finally walk.close()
-      } catch { case _: java.io.IOException => () }
-      d = dirs.poll()
-    }
   }
 }

@@ -135,9 +135,9 @@ class PlanSpec extends SparkSpec {
     * stats would otherwise broadcast everything and hide a stray hint.) */
   def planNoAutoBroadcast(name: String): String = {
     val key = "spark.sql.autoBroadcastJoinThreshold"
-    // ALSO disable the ADAPTIVE conversion threshold (round 16): operators
-    // that materialize multi-consumer frames (Caches.materialAdaptive)
-    // EXECUTE that sub-frame during query construction, and its embedded
+    // ALSO disable the ADAPTIVE conversion threshold: construction-time
+    // fits and counts (codebook and centroid fits, g2's edge count)
+    // EXECUTE a sub-frame while the query is built, and its embedded
     // final adaptive plan would otherwise carry runtime-chosen
     // BroadcastExchanges — by-design AQE decisions from measured tiny test
     // frames, not the static corpus-scaled hints these assertions hunt.
